@@ -31,6 +31,7 @@ from light_curve_python_spark.operators.bins import bin_series
 from light_curve_python_spark.operators.extract import FeatureExtractor
 from light_curve_python_spark.operators.sessionize import session_stats
 from light_curve_python_spark.plans.balance import rebalance_scan, spread
+from light_curve_python_spark.session import drop_zip_importers
 from light_curve_python_spark.operators.windows import (
     backfill,
     rolling_range_agg,
@@ -1971,6 +1972,7 @@ def q_periodogram_grid(spark, sf_dir):
                           "power": pd.Series([], dtype="float64")})
 
     def fn(pdf: pd.DataFrame) -> pd.DataFrame:
+        drop_zip_importers()
         t = pdf["t"].to_numpy(np.float64)
         m = pdf["m"].to_numpy(np.float64)
         # degenerate groups (n < 2 or zero variance) are EXCLUDED in both

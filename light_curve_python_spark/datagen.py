@@ -23,6 +23,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
+from .session import drop_zip_importers
+
 __all__ = [
     "SEQUENCES_SCHEMA", "OBSERVATIONS_SCHEMA", "PROBES_SCHEMA",
     "generate_sequences", "generate_observations", "generate_probes",
@@ -81,6 +83,7 @@ def generate_sequences(spark: SparkSession, n_entities: int,
                          numPartitions=partitions or min(n_entities, 64))
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        drop_zip_importers()
         for pdf in batches:
             rows = []
             for i in pdf["id"]:
@@ -109,6 +112,7 @@ def generate_observations(spark: SparkSession, n_entities: int,
     band_arr = np.asarray(bands)
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        drop_zip_importers()
         for pdf in batches:
             frames = []
             for i in pdf["id"]:
@@ -148,6 +152,7 @@ def generate_probes(spark: SparkSession, n_entities: int,
                          numPartitions=partitions or min(n_entities, 64))
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        drop_zip_importers()
         for pdf in batches:
             frames = []
             for i in pdf["id"]:

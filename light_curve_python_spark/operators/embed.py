@@ -28,6 +28,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 
+from ..session import drop_zip_importers
+
 from .reductions import reduce_sequence
 
 __all__ = ["random_projection_encoder", "embed_sequences"]
@@ -87,6 +89,7 @@ def embed_sequences(df: DataFrame, tokens_col: str = "tokens",
         + [T.StructField(out_col, T.ArrayType(T.FloatType()), False)])
 
     def fn(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        drop_zip_importers()
         for pdf in it:
             for lo in range(0, len(pdf), batch_size):
                 chunk = pdf.iloc[lo:lo + batch_size]

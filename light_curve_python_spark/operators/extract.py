@@ -44,6 +44,7 @@ from pyspark.sql import types as T
 from ..functions.battery import PrefixBattery
 from ..functions.kernels import Kernel, evaluate_many, make_kernel
 from ..functions.transforms import apply_transform_column
+from ..session import drop_zip_importers
 
 __all__ = ["FeatureExtractor"]
 
@@ -205,6 +206,7 @@ class FeatureExtractor:
 
         if not grouped_batches:
             def fn_group(pdf: pd.DataFrame) -> pd.DataFrame:
+                drop_zip_importers()
                 t, m, s, codes = this._prepare_arrays(
                     pdf, t_col, m_col, sigma_col, band_col)
                 vec = (this._eval_window(t, m, s) if codes is None
@@ -251,6 +253,7 @@ class FeatureExtractor:
              .agg(F.collect_list(F.struct(*fields)).alias(curve_col)))
 
         def fn(batches):
+            drop_zip_importers()
             for batch in batches:
                 col = batch.column(batch.schema.names.index(curve_col))
                 values = col.values          # struct child (unsliced)
@@ -399,6 +402,7 @@ class FeatureExtractor:
                 entity_col, t_col, m_col, sigma_col, ts_col))
 
         def fn(obs_pdf: pd.DataFrame, probes_pdf: pd.DataFrame) -> pd.DataFrame:
+            drop_zip_importers()
             if len(probes_pdf) == 0:
                 return pd.DataFrame(columns=[f.name for f in schema.fields])
             out = probes_pdf.reset_index(drop=True)
@@ -465,6 +469,7 @@ class FeatureExtractor:
         probe_names = [f.name for f in probes.schema.fields]
 
         def fn(obs_t: "pa.Table", probes_t: "pa.Table") -> "pa.Table":
+            drop_zip_importers()
             out_schema = pa.schema(
                 list(probes_t.schema)
                 + [pa.field(n, pa.float64()) for n in feature_names])
@@ -581,6 +586,7 @@ class FeatureExtractor:
         bands = self.bands
 
         def fn(batches):
+            drop_zip_importers()
             for batch in batches:
                 col = batch.column(batch.schema.names.index(curve_col))
                 if col.null_count:

@@ -20,6 +20,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..session import drop_zip_importers
+
 __all__ = ["grouped_map_batches", "per_group"]
 
 
@@ -60,6 +62,7 @@ def grouped_map_batches(df: DataFrame, entity_col: str, schema,
         .sortWithinPartitions(entity_col, *sort_cols)
 
     def fn(batches):
+        drop_zip_importers()
         buf = []            # frames of the in-progress tail entity
         buf_key = None
         for pdf in batches:

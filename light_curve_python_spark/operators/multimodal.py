@@ -30,6 +30,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..session import drop_zip_importers
+
 __all__ = ["MEDIA_SCHEMA", "FEATURE_SCHEMA", "attach_media_metadata",
            "decode_and_featurize", "decode_netpbm", "decode_wav",
            "decode_y4m_frames", "resize_nearest"]
@@ -251,6 +253,7 @@ def decode_and_featurize(df: DataFrame, codec: str = "real",
         raise NotImplementedError(f"unknown codec mode: {codec!r}")
 
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        drop_zip_importers()
         for pdf in batches:
             kinds, feats = [], []
             for b in pdf["payload"]:

@@ -28,6 +28,7 @@ from pyspark.sql import types as T
 from pyspark.sql.functions import pandas_udf
 
 from ..plans.balance import rebalance_scan
+from ..session import drop_zip_importers
 
 __all__ = ["cosine_topk", "lsh_topk", "ivf_topk", "with_l2_norm",
            "ivf_train_centers", "ann_recall", "tune_ann"]
@@ -45,6 +46,7 @@ def _cosine_pudf(a: pd.Series, b: pd.Series) -> pd.Series:
     HOF dot at 64-dim (sf0.1 re-rank of 82k pairs: 2.39 s HOF vs 1.29 s
     Arrow end-to-end, min-of-3) — the HOF lambda is interpreted per
     element, the Arrow batch is one BLAS-shaped pass."""
+    drop_zip_importers()
     if not len(a):
         return pd.Series([], dtype="float64")
     an = a.to_numpy()
@@ -163,6 +165,7 @@ def ivf_topk(corpus: DataFrame, probes: DataFrame, k: int = 10,
 
         @pandas_udf(T.ArrayType(T.IntegerType()))
         def nearest_cells(vecs: pd.Series) -> pd.Series:
+            drop_zip_importers()
             mat = np.vstack(vecs.to_numpy())
             d = ((mat[:, None, :] - centers[None, :, :]) ** 2).sum(axis=2)
             order = np.argsort(d, axis=1)[:, :n_keep].astype(np.int32)
@@ -209,6 +212,7 @@ def _buckets_udf(dim: int, n_planes: int, seed: int, n_tables: int):
 
     @pandas_udf(T.ArrayType(T.LongType()))
     def buckets(vecs: pd.Series) -> pd.Series:
+        drop_zip_importers()
         mat = np.vstack(vecs.to_numpy())
         signs = (mat @ planes) > 0
         bks = signs.reshape(len(mat), n_tables,

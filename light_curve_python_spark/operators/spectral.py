@@ -16,6 +16,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 
 from ..functions.kernels import periodogram_power
+from ..session import drop_zip_importers
 from .dmdt import (count_dt_kernel, dmdt_gausses_kernel, dmdt_points_kernel,
                    normalize_dmdt)
 from .grouped import grouped_map_batches, per_group
@@ -144,6 +145,7 @@ def multiband_periodogram(obs: DataFrame, bands: Sequence[str],
              .alias("_curve")))
 
     def fn(batches):
+        drop_zip_importers()
         for batch in batches:
             col = batch.column(batch.schema.names.index("_curve"))
             values = col.values

@@ -10,11 +10,13 @@ from __future__ import annotations
 
 import os
 import re
+import sys
+import zipimport
 from typing import Optional
 
 from pyspark.sql import SparkSession
 
-__all__ = ["get_spark", "DEFAULT_SHUFFLE_PARTITIONS"]
+__all__ = ["get_spark", "drop_zip_importers", "DEFAULT_SHUFFLE_PARTITIONS"]
 
 # empty-string env (e.g. `SPARK_GRAFT_CPUS= spark-submit ...`) means unset
 DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS") or "32")
@@ -43,6 +45,44 @@ def _defaults_conf_has_master() -> bool:
     except OSError:
         return False
     return False
+
+
+# (len, last key) of sys.path_importer_cache after the last drop.  A dict
+# appends new keys at its end, so an added entry moves one of the two
+# unless as many were deleted meanwhile (invalidate_caches drops None and
+# relative-path entries); a drop missed that way only costs the next task
+# its re-read.  Mirrors process-global state, hence module-level.
+_importer_cache_mark = None
+
+
+def drop_zip_importers() -> None:
+    """Delete the ``zipimport.zipimporter`` entries from
+    ``sys.path_importer_cache``.
+
+    Spark's Python worker calls ``importlib.invalidate_caches()`` at the
+    start of every task (``setup_spark_files``); on CPython < 3.12 that
+    makes every cached zipimporter re-parse its archive's central
+    directory.  The worker's PYTHONPATH holds pyspark.zip, the py4j zip
+    and the spark-core jar, and importing pyspark from the zip caches one
+    importer per package directory, so every task re-parses tens of
+    thousands of archive entries before any data moves.  The cache is
+    documented as a cache: a deleted entry is rebuilt from
+    ``sys.path_hooks`` on the next lookup (zipimporter reuses its
+    module-level directory cache, so that is cheap), and imports resolve
+    exactly as before.
+
+    Call it first thing in every Python function handed to Spark.  It is
+    O(1) when no importer cache entry was added since its last run, so
+    per-group functions may call it once per group."""
+    global _importer_cache_mark
+    cache = sys.path_importer_cache
+    mark = (len(cache), next(reversed(cache), None))
+    if mark == _importer_cache_mark:
+        return
+    for path, finder in list(cache.items()):
+        if isinstance(finder, zipimport.zipimporter):
+            del cache[path]
+    _importer_cache_mark = (len(cache), next(reversed(cache), None))
 
 
 def _local_dirs() -> Optional[str]:
@@ -105,8 +145,11 @@ def get_spark(master: Optional[str] = None,
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
-        # default-true, pinned: forked Python workers persist across tasks,
-        # so kernel import/jit costs are paid once per core, not per task
+        # default-true, pinned: forked Python workers persist across tasks
+        # and keep their imports, but Spark's per-task
+        # importlib.invalidate_caches() re-reads every cached zip archive
+        # (pyspark.zip, the Spark jar); drop_zip_importers(), called at
+        # every UDF entry, removes that per-task cost
         .config("spark.python.worker.reuse", "true")
         .config("spark.driver.memory",
                 os.environ.get("SPARK_DRIVER_MEMORY", "8g"))

@@ -36,6 +36,8 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
+from ..session import drop_zip_importers
+
 __all__ = ["streaming_asof_join"]
 
 
@@ -84,6 +86,7 @@ def streaming_asof_join(probes: DataFrame, obs: DataFrame, on: str,
 
     def fn(key: Tuple, pdfs: Iterable[pd.DataFrame],
            state: GroupState) -> Iterator[pd.DataFrame]:
+        drop_zip_importers()
         if state.exists:
             stored = state.get
             hist_t = np.asarray(stored[0], dtype=np.float64)

@@ -25,6 +25,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
+from ..session import drop_zip_importers
+
 __all__ = ["streaming_pit_features", "STREAM_FEATURE_NAMES",
            "streaming_quantile_features", "QUANTILE_STREAM_NAMES"]
 
@@ -82,6 +84,7 @@ def streaming_pit_features(obs: DataFrame, key_col: str = "doc_id",
 
     def fn(key: Tuple, pdfs: Iterable[pd.DataFrame],
            state: GroupState) -> Iterator[pd.DataFrame]:
+        drop_zip_importers()
         if state.exists:
             (n, mean, m2, sw, swm, mn, mx, t0, last_t, max_dt) = state.get
         else:
@@ -226,6 +229,7 @@ def streaming_quantile_features(obs: DataFrame, key_col: str = "doc_id",
 
     def fn(key: Tuple, pdfs: Iterable[pd.DataFrame],
            state: GroupState) -> Iterator[pd.DataFrame]:
+        drop_zip_importers()
         if state.exists:
             lo, hi, last_t, state_bins, blob = state.get
             if state_bins != bins:
