@@ -2,7 +2,7 @@
 
 Recasts the reference's per-curve evaluators (``Feature.__call__`` /
 ``Feature.many``, /root/reference/light-curve/src/features.rs:2289-2531) as
-Arrow-batched grouped pandas UDFs:
+Arrow-batched grouped UDFs:
 
 - :meth:`FeatureExtractor.extract` — one feature vector per entity over its
   whole series (the reference's ``many``: one curve in, one vector out).
@@ -26,9 +26,9 @@ a single task.  Only the probe side is split — every probe still sees the full
 observation history, so order-sensitive kernels stay exact (SURVEY.md §7
 "hard parts" (4)).
 
-The token payload (or any probe column) is carried through untouched: feature
-columns are appended to the probe pandas frame, the Arrow round-trip of
-``array<int32>`` is lossless (asserted byte-for-byte in tests/test_extract.py).
+The token payload (or any probe column) is carried through untouched: the
+point-in-time cogroup appends feature columns to the probe Arrow buffers as
+they arrived (asserted byte-for-byte in tests/test_extract.py).
 """
 
 from __future__ import annotations
@@ -37,12 +37,13 @@ from typing import Iterable, List, Optional, Sequence, Union
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..functions.battery import PrefixBattery
-from ..functions.kernels import Kernel, evaluate_many, make_kernel
+from ..functions.curves import eval_window, sort_curve
+from ..functions.kernels import Kernel, make_kernel
 from ..functions.transforms import apply_transform_column
 from ..session import drop_zip_importers
 
@@ -124,52 +125,6 @@ class FeatureExtractor:
                 "(a duplicate-name schema fails deep inside the "
                 "executors otherwise)")
 
-    def _eval_window(self, t, m, s) -> np.ndarray:
-        if self.bands is None:
-            return evaluate_many(self.kernels, t, m, s, self.fill_value)
-        raise AssertionError("banded path uses _eval_window_banded")
-
-    def _eval_window_banded(self, t, m, s, band_codes) -> np.ndarray:
-        outs = []
-        for bi in range(len(self.bands)):
-            mask = band_codes == bi
-            outs.append(evaluate_many(
-                self.kernels, t[mask], m[mask],
-                None if s is None else s[mask], self.fill_value))
-        return np.concatenate(outs)
-
-    def _prepare_arrays(self, pdf: pd.DataFrame, t_col, m_col, sigma_col,
-                        band_col):
-        t = pdf[t_col].to_numpy(dtype=np.float64)
-        m = pdf[m_col].to_numpy(dtype=np.float64)
-        # lexsort (t, then m): identical to the plain t-sort whenever t
-        # is unique (the validated-ingest guarantee), and a DETERMINISTIC
-        # tie order otherwise — a stable sort alone would preserve
-        # arbitrary shuffle arrival order among equal-t rows, making
-        # consecutive-difference kernels differ between runs/retries
-        order = np.lexsort((m, t))
-        t = t[order]
-        m = m[order]
-        s = (pdf[sigma_col].to_numpy(dtype=np.float64)[order]
-             if sigma_col else None)
-        codes = None
-        if self.bands is not None:
-            vals = pdf[band_col].to_numpy()[order]
-            codes = pd.Categorical(vals, categories=self.bands).codes
-            # a TYPE mismatch (integer-coded column vs string bands or
-            # vice versa) makes every code -1 and would silently emit
-            # all-fill output for the whole table; an entity merely
-            # observed in other bands is legitimate and keeps the fill
-            # behavior
-            if len(codes) and (codes == -1).all() \
-                    and isinstance(vals[0], (str, bytes)) \
-                    != isinstance(self.bands[0], (str, bytes)):
-                raise ValueError(
-                    f"band column type {type(vals[0]).__name__!r} cannot "
-                    f"match bands={self.bands!r} — every code resolves "
-                    "to -1 (all-fill output)")
-        return t, m, s, codes
-
     # ---- whole-entity extraction -----------------------------------------
 
     def extract(self, obs: DataFrame, entity_col: str = "doc_id",
@@ -202,15 +157,16 @@ class FeatureExtractor:
         self._check_name_collisions([entity_col], "the entity column")
         schema = T.StructType([entity_field] + self._feature_fields())
         names = self.names
-        this = self
+        kernels, fill, bands = self.kernels, self.fill_value, self.bands
 
         if not grouped_batches:
             def fn_group(pdf: pd.DataFrame) -> pd.DataFrame:
                 drop_zip_importers()
-                t, m, s, codes = this._prepare_arrays(
-                    pdf, t_col, m_col, sigma_col, band_col)
-                vec = (this._eval_window(t, m, s) if codes is None
-                       else this._eval_window_banded(t, m, s, codes))
+                vec = eval_window(kernels, fill, bands, *sort_curve(
+                    pdf[t_col].to_numpy(), pdf[m_col].to_numpy(),
+                    pdf[sigma_col].to_numpy() if sigma_col else None,
+                    pdf[band_col].to_numpy() if bands is not None else None,
+                    bands))
                 row = {entity_col: [pdf[entity_col].iloc[0]]}
                 row.update({n: [v] for n, v in zip(names, vec)})
                 return pd.DataFrame(row)
@@ -235,13 +191,12 @@ class FeatureExtractor:
         floor of the 11.4M-row periodogram headline at sf1.  Same
         numbers: per-entity arrays are identical (lexsort tie order,
         NaN-for-null via Arrow, the band-code guard — all exactly
-        _prepare_arrays semantics; the struct fields of one collect_list
+        functions.curves.sort_curve; the struct fields of one collect_list
         are filled from the same input iterator, so columns cannot
         misalign)."""
         import pyarrow as pa
 
-        this = self
-        bands = self.bands
+        kernels, fill, bands = self.kernels, self.fill_value, self.bands
         has_sigma = sigma_col is not None
         fields = [F.col(t_col).alias("t"), F.col(m_col).alias("m")]
         if has_sigma:
@@ -271,32 +226,13 @@ class FeatureExtractor:
                     nxt += 1
                 b_all = (values.field(nxt).to_numpy(zero_copy_only=False)
                          if bands is not None else None)
-                nrows = len(col)
-                feats = np.empty((nrows, len(names)), dtype=np.float64)
-                for i in range(nrows):
+                feats = np.empty((len(col), len(names)), dtype=np.float64)
+                for i in range(len(col)):
                     sl = slice(offs[i], offs[i + 1])
-                    t = t_all[sl]
-                    m = m_all[sl]
-                    # deterministic tie order, identical to
-                    # _prepare_arrays (see there)
-                    order = np.lexsort((m, t))
-                    t = t[order]
-                    m = m[order]
-                    s = s_all[sl][order] if s_all is not None else None
-                    if bands is None:
-                        feats[i] = this._eval_window(t, m, s)
-                    else:
-                        vals = b_all[sl][order]
-                        codes = pd.Categorical(vals,
-                                               categories=bands).codes
-                        # type-mismatch guard — see _prepare_arrays
-                        if len(codes) and (codes == -1).all() \
-                                and isinstance(vals[0], (str, bytes)) \
-                                != isinstance(bands[0], (str, bytes)):
-                            raise ValueError(
-                                f"band column type cannot match "
-                                f"bands={bands!r} (all codes -1)")
-                        feats[i] = this._eval_window_banded(t, m, s, codes)
+                    feats[i] = eval_window(kernels, fill, bands, *sort_curve(
+                        t_all[sl], m_all[sl],
+                        None if s_all is None else s_all[sl],
+                        None if b_all is None else b_all[sl], bands))
                 out_schema = pa.schema(
                     [batch.schema.field(entity_col)]
                     + [pa.field(n, pa.float64()) for n in names])
@@ -320,59 +256,23 @@ class FeatureExtractor:
             sigma_col: Optional[str] = "sigma", band_col: str = "band",
             ts_col: str = "ts", horizon: Optional[float] = None,
             salt_partitions: Optional[int] = None,
-            hot_threshold: Optional[int] = None,
-            payload_via_join: bool = True,
-            use_arrow: bool = True) -> DataFrame:
+            hot_threshold: Optional[int] = None) -> DataFrame:
         """Feature vector per probe row, window = {obs : t <= ts
-        [and t >= ts - horizon, both bounds inclusive]}.  All probe columns pass through untouched.
+        [and t >= ts - horizon, both bounds inclusive]}.
 
-        payload_via_join: when probes carry extra columns (token payloads),
-        don't ship them through the Python workers at all — the UDF sees only
-        (entity, ts, uid) and the payload is joined back JVM-side by uid.
-        Byte-identical result (it never leaves the JVM), far less Arrow I/O.
+        One ``applyInArrow`` cogroup per entity: column buffers go straight
+        to numpy, and every probe column (token payloads included) passes
+        through untouched as a raw Arrow buffer.  Full-history band-free
+        windows evaluate a group's whole probe set in one
+        :class:`PrefixBattery` pass; a horizon or bands evaluate each
+        probe's window slice.  Fill rows are NaN doubles on the battery
+        route and SQL NULL on the per-window route.
         """
         # prune sigma when no kernel needs it (an explicitly passed
         # column would otherwise ship through Arrow for nothing, and a
         # sigma-less dataset would fail the select)
         sigma_col = sigma_col if self.needs_sigma else None
-        arrow_ok = (use_arrow and horizon is None and self.bands is None)
-        payload_cols = [c for c in probes.columns
-                        if c not in (entity_col, ts_col)]
-        # collision check on the FULL probe schema before any branching —
-        # the payload_via_join recursion only sees the slim columns, and a
-        # payload column named like a feature output would otherwise
-        # surface as an ambiguous-reference error deep in the job
         self._check_name_collisions(probes.columns, "probe columns")
-        # the uid-join detour only pays when payload columns would otherwise
-        # be materialized as pandas objects; the Arrow path streams them
-        # through as raw buffers, so it keeps the payload inline
-        if payload_via_join and payload_cols and not arrow_ok:
-            # DETERMINISTIC uid: row_number within the entity partition,
-            # ordered by ts.  monotonically_increasing_id depends on the
-            # physical partition layout, so a task retry / AQE replan could
-            # assign different ids in the slim branch vs the join-back
-            # branch.  row_number ties (same entity, same ts) are assigned
-            # arbitrarily, but such probes have IDENTICAL feature input, so
-            # any assignment joins a correct feature row to each payload.
-            # The window shuffles on the same entity key the cogroup needs.
-            w_uid = Window.partitionBy(entity_col).orderBy(ts_col)
-            probes_uid = probes.withColumn(
-                "_probe_rn", F.row_number().over(w_uid))
-            slim = probes_uid.select(entity_col, ts_col, "_probe_rn")
-            feats = self.extract_point_in_time(
-                obs, slim, entity_col, t_col, m_col, sigma_col, band_col,
-                ts_col, horizon, salt_partitions, hot_threshold,
-                payload_via_join=False, use_arrow=use_arrow)
-            # null-SAFE equality on the entity key: the cogroup path emits
-            # fill rows for null-entity probes (groupBy keeps the null
-            # group), and a plain inner join's null != null would silently
-            # drop exactly those rows on this branch
-            f = feats.drop(ts_col)
-            out = probes_uid.join(
-                f, probes_uid[entity_col].eqNullSafe(f[entity_col])
-                & (probes_uid["_probe_rn"] == f["_probe_rn"]),
-                "inner").drop(f[entity_col]).drop(f["_probe_rn"])
-            return out.drop("_probe_rn")
         ocols = [entity_col, t_col, m_col]
         if sigma_col:
             ocols.append(sigma_col)
@@ -385,122 +285,73 @@ class FeatureExtractor:
             obs_p, probes, group_keys = self._salt(
                 obs_p, probes, entity_col, ts_col,
                 salt_partitions, hot_threshold)
-
-        self._check_name_collisions(probes.columns, "probe columns")
-        probe_fields = [f for f in probes.schema.fields]
-        schema = T.StructType(probe_fields + self._feature_fields())
-        names = self.names
-        this = self
-        # prefix-vectorized path: full-history windows, single band —
-        # evaluates the entire probe set of a group in one pass
-        battery = (PrefixBattery(self.kernels, self.fill_value)
-                   if horizon is None and self.bands is None else None)
-
-        if battery is not None and use_arrow:
-            return self._apply_transforms(self._pit_arrow(
-                obs_p, probes, group_keys, schema, battery,
-                entity_col, t_col, m_col, sigma_col, ts_col))
-
-        def fn(obs_pdf: pd.DataFrame, probes_pdf: pd.DataFrame) -> pd.DataFrame:
-            drop_zip_importers()
-            if len(probes_pdf) == 0:
-                return pd.DataFrame(columns=[f.name for f in schema.fields])
-            out = probes_pdf.reset_index(drop=True)
-            if len(obs_pdf) == 0:
-                t = m = np.empty(0)
-                s = np.empty(0) if sigma_col else None
-                codes = (np.empty(0, dtype=np.int8)
-                         if this.bands is not None else None)
-            else:
-                t, m, s, codes = this._prepare_arrays(
-                    obs_pdf, t_col, m_col, sigma_col, band_col)
-            cutoffs = out[ts_col].to_numpy(dtype=np.float64)
-            if battery is not None:
-                ends = np.searchsorted(t, cutoffs, side="right")
-                # a NULL/NaN cutoff must see NOTHING (fill row) — searchsorted
-                # treats NaN as +inf, which would leak the full history
-                ends[np.isnan(cutoffs)] = 0
-                feats = battery.evaluate_prefixes(t, m, s, ends)
-            else:
-                feats = np.empty((len(out), len(names)), dtype=np.float64)
-                for j, cutoff in enumerate(cutoffs):
-                    if np.isnan(cutoff):
-                        # NULL/NaN cutoff sees NOTHING (fill row) — NaN
-                        # compares as +inf in searchsorted and would leak
-                        # the full history
-                        lo = hi = 0
-                    else:
-                        hi = np.searchsorted(t, cutoff, side="right")
-                        # inclusive lower bound: t >= ts - horizon, matching
-                        # Window.rangeBetween(-horizon, 0)
-                        lo = (np.searchsorted(t, cutoff - horizon,
-                                              side="left")
-                              if horizon is not None else 0)
-                    sl = slice(lo, hi)
-                    sw = None if s is None else s[sl]
-                    if codes is None:
-                        feats[j] = this._eval_window(t[sl], m[sl], sw)
-                    else:
-                        feats[j] = this._eval_window_banded(
-                            t[sl], m[sl], sw, codes[sl])
-            # single concat, not 40 per-column inserts per group
-            return pd.concat(
-                [out, pd.DataFrame(feats, columns=list(names))], axis=1)
-
-        grouped = obs_p.groupby(*group_keys).cogroup(
-            probes.groupby(*group_keys))
-        out = grouped.applyInPandas(fn, schema)
+        schema = T.StructType(probes.schema.fields + self._feature_fields())
+        out = self._pit_arrow(obs_p, probes, group_keys, schema, horizon,
+                              t_col, m_col, sigma_col, band_col, ts_col)
         if "_salt" in out.columns:
             out = out.drop("_salt")
         return self._apply_transforms(out)
 
-    # ---- arrow fast path ----------------------------------------------------
-
     def _pit_arrow(self, obs_p: DataFrame, probes: DataFrame, group_keys,
-                   schema, battery, entity_col, t_col, m_col, sigma_col,
+                   schema, horizon, t_col, m_col, sigma_col, band_col,
                    ts_col) -> DataFrame:
-        """applyInArrow variant of the prefix-battery PIT extraction: no
-        pandas materialization — Arrow column buffers go straight to numpy
-        (~25-35% faster end to end than the pandas UDF at both 8 and 32
-        cores on the sf0.1 flagship)."""
+        """The per-entity ``applyInArrow`` cogroup behind every
+        :meth:`extract_point_in_time` call."""
         import pyarrow as pa
 
-        feature_names = list(battery.names)
-        probe_names = [f.name for f in probes.schema.fields]
+        names = self.names
+        probe_names = probes.columns
+        kernels, fill, bands = self.kernels, self.fill_value, self.bands
+        battery = (PrefixBattery(kernels, fill)
+                   if horizon is None and bands is None else None)
 
         def fn(obs_t: "pa.Table", probes_t: "pa.Table") -> "pa.Table":
             drop_zip_importers()
             out_schema = pa.schema(
                 list(probes_t.schema)
-                + [pa.field(n, pa.float64()) for n in feature_names])
+                + [pa.field(n, pa.float64()) for n in names])
             if probes_t.num_rows == 0:
                 return out_schema.empty_table()
-            t = obs_t.column(t_col).to_numpy()
-            m = obs_t.column(m_col).to_numpy()
-            # lexsort (m tiebreak), matching _prepare_arrays: a stable
-            # sort alone keeps arbitrary shuffle arrival order among
-            # equal-t rows, so consecutive-difference kernels would
-            # differ between runs/retries
-            order = np.lexsort((m, t))
-            t = t[order]
-            m = m[order]
-            s = (obs_t.column(sigma_col).to_numpy()[order]
-                 if sigma_col else None)
-            ts = probes_t.column(ts_col).to_numpy()
+            t, m, s, codes = sort_curve(
+                obs_t.column(t_col).to_numpy(),
+                obs_t.column(m_col).to_numpy(),
+                obs_t.column(sigma_col).to_numpy() if sigma_col else None,
+                obs_t.column(band_col).to_numpy()
+                if bands is not None else None, bands)
+            ts = probes_t.column(ts_col).to_numpy() \
+                .astype(np.float64, copy=False)
             ends = np.searchsorted(t, ts, side="right")
-            ends[np.isnan(ts)] = 0  # NaN cutoff sees nothing (fill row)
-            feats = battery.evaluate_prefixes(t, m, s, ends)
+            # a NULL/NaN cutoff must see NOTHING (fill row) — searchsorted
+            # treats NaN as +inf, which would leak the full history
+            cut = np.isnan(ts)
+            ends[cut] = 0
+            if battery is not None:
+                feats = battery.evaluate_prefixes(t, m, s, ends)
+            else:
+                # inclusive lower bound: t >= ts - horizon, matching
+                # Window.rangeBetween(-horizon, 0)
+                starts = (np.searchsorted(t, ts - horizon, side="left")
+                          if horizon is not None else np.zeros_like(ends))
+                starts[cut] = 0
+                feats = np.empty((len(ts), len(names)), dtype=np.float64)
+                for j in range(len(ts)):
+                    sl = slice(starts[j], ends[j])
+                    feats[j] = eval_window(
+                        kernels, fill, bands, t[sl], m[sl],
+                        None if s is None else s[sl],
+                        None if codes is None else codes[sl])
+            # fill rows: NaN doubles on the battery route, SQL NULL
+            # (from_pandas) on the per-window route — both pinned by
+            # test_point_in_time_fill_encoding
             cols = [probes_t.column(n).combine_chunks()
                     for n in probe_names] + \
-                   [pa.array(feats[:, i]) for i in range(feats.shape[1])]
+                   [pa.array(feats[:, i], from_pandas=battery is None)
+                    for i in range(len(names))]
             return pa.Table.from_arrays(cols, schema=out_schema)
 
         grouped = obs_p.groupby(*group_keys).cogroup(
             probes.groupby(*group_keys))
-        out = grouped.applyInArrow(fn, schema)
-        if "_salt" in out.columns:
-            out = out.drop("_salt")
-        return out
+        return grouped.applyInArrow(fn, schema)
 
     # ---- nested-input extraction --------------------------------------------
 
@@ -582,8 +433,7 @@ class FeatureExtractor:
         schema = T.StructType(
             [df.schema[c] for c in pass_names] + self._feature_fields())
         names = self.names
-        this = self
-        bands = self.bands
+        kernels, fill, bands = self.kernels, self.fill_value, self.bands
 
         def fn(batches):
             drop_zip_importers()
@@ -608,34 +458,13 @@ class FeatureExtractor:
                     if bch.null_count:
                         raise ValueError("null band values are not allowed")
                     band_all = bch.to_numpy(zero_copy_only=False)
-                nrows = len(col)
-                feats = np.empty((nrows, len(names)), dtype=np.float64)
-                for i in range(nrows):
+                feats = np.empty((len(col), len(names)), dtype=np.float64)
+                for i in range(len(col)):
                     sl = slice(offs[i], offs[i + 1])
-                    t = childs[t_idx][sl]
-                    m = childs[m_idx][sl]
-                    # deterministic tie order on duplicate t, identical
-                    # to the plain t-sort when t is unique (see
-                    # _prepare_arrays)
-                    order = np.lexsort((m, t))
-                    t = t[order]
-                    m = m[order]
-                    s = (childs[s_idx][sl][order]
-                         if s_idx is not None else None)
-                    if bands is None:
-                        feats[i] = this._eval_window(t, m, s)
-                    else:
-                        bvals = band_all[sl][order]
-                        codes = pd.Categorical(bvals,
-                                               categories=bands).codes
-                        # type-mismatch guard — see _prepare_arrays
-                        if len(codes) and (codes == -1).all() \
-                                and isinstance(bvals[0], (str, bytes)) \
-                                != isinstance(bands[0], (str, bytes)):
-                            raise ValueError(
-                                f"band field type cannot match "
-                                f"bands={bands!r} (all codes -1)")
-                        feats[i] = this._eval_window_banded(t, m, s, codes)
+                    feats[i] = eval_window(kernels, fill, bands, *sort_curve(
+                        childs[t_idx][sl], childs[m_idx][sl],
+                        None if s_idx is None else childs[s_idx][sl],
+                        None if b_idx is None else band_all[sl], bands))
                 out = pa.schema(
                     [batch.schema.field(n) for n in pass_names]
                     + [pa.field(n, pa.float64()) for n in names])

@@ -43,15 +43,38 @@ def data(spark):
 
 def _numpy_window_features(kernels, obs_pd, doc_id, cutoff=None, horizon=None):
     g = obs_pd[obs_pd.doc_id == doc_id].sort_values("t")
-    t = g.t.to_numpy(float)
-    m = g.m.to_numpy(float)
-    s = g.sigma.to_numpy(float)
+    # fresh arrays: a pandas column can be a row of a 2-D block, at any
+    # alignment
+    t = g.t.to_numpy(float, copy=True)
+    m = g.m.to_numpy(float, copy=True)
+    s = g.sigma.to_numpy(float, copy=True)
     if cutoff is not None:
         mask = t <= cutoff
         if horizon is not None:
             mask &= t >= cutoff - horizon
-        t, m, s = t[mask], m[mask], s[mask]
+        # the window is a contiguous run of the sorted history; take it as
+        # a view, like the engine does: BLAS dot products (linear_fit)
+        # depend on the operands' 16-byte alignment, so a masked copy can
+        # differ from the view in the last bit
+        idx = np.flatnonzero(mask)
+        sl = slice(idx[0], idx[-1] + 1) if len(idx) else slice(0, 0)
+        assert mask[sl].sum() == len(idx)
+        t, m, s = t[sl], m[sl], s[sl]
     return evaluate_many(kernels, t, m, s, fill_value=np.nan)
+
+
+def _numpy_window_banded(kernels, bands, obs_pd, doc_id, cutoff,
+                         horizon=None):
+    g = obs_pd[obs_pd.doc_id == doc_id].sort_values("t")
+    mask = g.t <= cutoff
+    if horizon is not None:
+        mask &= g.t >= cutoff - horizon
+    g = g[mask]
+    return np.concatenate([
+        evaluate_many(kernels, b.t.to_numpy(float, copy=True),
+                      b.m.to_numpy(float, copy=True),
+                      b.sigma.to_numpy(float, copy=True), fill_value=np.nan)
+        for b in (g[g.band == band] for band in bands)])
 
 
 def test_extract_whole_entity_matches_numpy(spark, data):
@@ -97,30 +120,92 @@ def test_point_in_time_matches_numpy_and_no_leakage(spark, data):
 
 
 def test_token_payload_byte_identical(spark, data):
+    # expanding and horizon windows: both carry the payload through Python
     obs, probes, _, probes_pd = data
     ex = FeatureExtractor(["mean", "amplitude"])
-    got = ex.extract_point_in_time(obs, probes).toPandas()
     want = probes_pd.set_index(["doc_id", "ts"]).sort_index()
-    got = got.set_index(["doc_id", "ts"]).sort_index()
-    assert len(got) == len(want)
-    for idx in want.index:
-        wt = np.asarray(want.loc[idx, "tokens"], dtype=np.int32)
-        gt = np.asarray(got.loc[idx, "tokens"], dtype=np.int32)
-        assert wt.tobytes() == gt.tobytes()
-    assert (got["n_tok"] == want["n_tok"]).all()
-    assert (got["source"] == want["source"]).all()
+    for kwargs in ({}, {"horizon": 100.0}):
+        got = ex.extract_point_in_time(obs, probes, **kwargs).toPandas()
+        got = got.set_index(["doc_id", "ts"]).sort_index()
+        assert len(got) == len(want)
+        for idx in want.index:
+            wt = np.asarray(want.loc[idx, "tokens"], dtype=np.int32)
+            gt = np.asarray(got.loc[idx, "tokens"], dtype=np.int32)
+            assert wt.tobytes() == gt.tobytes()
+        assert (got["n_tok"] == want["n_tok"]).all()
+        assert (got["source"] == want["source"]).all()
 
 
 def test_range_horizon_window(spark, data):
+    # rtol=0: each window is evaluated by the same evaluate_many as the
+    # reference, so the values are bit-equal
     obs, probes, obs_pd, _ = data
-    ex = FeatureExtractor(["mean", "observation_count"])
+    ex = FeatureExtractor(FEATURES)
     h = 100.0
     got = ex.extract_point_in_time(obs, probes, horizon=h).toPandas()
+    assert len(got) > 0
     for _, row in got.iterrows():
         want = _numpy_window_features(ex.kernels, obs_pd, row.doc_id,
                                       cutoff=row.ts, horizon=h)
         np.testing.assert_allclose(
-            row[ex.names].to_numpy(float), want, rtol=RTOL, equal_nan=True)
+            row[ex.names].to_numpy(float), want, rtol=0, equal_nan=True)
+
+
+def test_horizon_plan_is_one_arrow_cogroup(spark, data):
+    """Horizon PIT runs on the Arrow cogroup alone: no pandas cogroup, no
+    row-number window and no join putting the payload back."""
+    obs, probes, _, _ = data
+    out = FeatureExtractor(["mean"]).extract_point_in_time(
+        obs, probes, horizon=100.0)
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("FlatMapCoGroupsInArrow") == 1
+    for node in ("FlatMapCoGroupsInPandas", "Window", "Join"):
+        assert node not in plan, node
+
+
+@pytest.mark.parametrize("horizon", [None, 80.0],
+                         ids=["expanding", "horizon"])
+def test_banded_point_in_time_matches_numpy(spark, data, horizon):
+    obs, probes, obs_pd, _ = data
+    bands = ["g", "r"]
+    ex = FeatureExtractor(["mean", "amplitude", "stetson_k", "eta"],
+                          bands=bands)
+    got = ex.extract_point_in_time(obs, probes, horizon=horizon).toPandas()
+    assert len(got) > 0
+    for _, row in got.iterrows():
+        want = _numpy_window_banded(ex.kernels, bands, obs_pd, row.doc_id,
+                                    row.ts, horizon)
+        np.testing.assert_allclose(
+            row[ex.names].to_numpy(float), want, rtol=0, equal_nan=True)
+
+
+def test_banded_point_in_time_rejects_band_type_mismatch(spark, data):
+    from pyspark.sql import functions as F
+    obs, probes, _, _ = data
+    ex = FeatureExtractor(["mean"], bands=["g", "r"])
+    with pytest.raises(Exception, match="band column type"):
+        ex.extract_point_in_time(
+            obs.withColumn("band", F.lit(0)), probes).collect()
+
+
+def test_point_in_time_fill_encoding(spark):
+    """Fill rows are NaN doubles on the expanding (prefix battery) route
+    and SQL NULL on the horizon and banded routes.  A NaN probe ts (a fill
+    row too) passes through as NaN on every route."""
+    import math
+    obs = spark.createDataFrame(
+        [("a", 1.0, 5.0, 0.1, "g"), ("a", 2.0, 6.0, 0.1, "g")],
+        "doc_id string, t double, m double, sigma double, band string")
+    probes = spark.createDataFrame([("a", 0.5), ("a", float("nan"))],
+                                   "doc_id string, ts double")
+    for ex, kwargs, col, nan_fill in (
+            (FeatureExtractor(["mean"]), {}, "mean", True),
+            (FeatureExtractor(["mean"]), {"horizon": 10.0}, "mean", False),
+            (FeatureExtractor(["mean"], bands=["g"]), {}, "mean_g", False)):
+        rows = ex.extract_point_in_time(obs, probes, **kwargs).collect()
+        assert sorted(str(r.ts) for r in rows) == ["0.5", "nan"]
+        for r in rows:
+            assert (math.isnan(r[col]) if nan_fill else r[col] is None)
 
 
 def test_salted_equals_unsalted(spark):
@@ -247,22 +332,22 @@ def test_extract_nested_banded_and_validation(spark):
 def test_nan_probe_ts_sees_nothing(spark, data):
     """A NULL/NaN probe timestamp must produce a FILL row, never the full
     observation history (searchsorted treats NaN as +inf — silent future
-    leakage otherwise).  Covers the battery, arrow, loop, and horizon
-    paths."""
+    leakage otherwise).  Covers the battery, horizon and banded
+    routes."""
     obs, probes, _, _ = data
     from pyspark.sql import functions as F
     bad = probes.limit(3).withColumn("ts", F.lit(None).cast("double"))
     mixed = probes.limit(5).unionByName(bad)
-    for kwargs in ({}, {"use_arrow": False}, {"horizon": 50.0}):
+    for kwargs, bands in (({}, None), ({"horizon": 50.0}, None),
+                          ({}, ["g", "r"])):
         ex = FeatureExtractor(["observation_count", "mean"],
-                              fill_value=-7.0)
+                              fill_value=-7.0, bands=bands)
         out = ex.extract_point_in_time(
             obs, mixed, entity_col="doc_id", ts_col="ts",
             **kwargs).toPandas()
         nan_rows = out[out.ts.isna()]
         assert len(nan_rows) == 3
-        assert (nan_rows.observation_count == -7.0).all()
-        assert (nan_rows["mean"] == -7.0).all()
+        assert (nan_rows[ex.names] == -7.0).all().all()
 
 
 def test_salted_horizon_equals_unsalted(spark, data):
@@ -463,7 +548,7 @@ def test_review_fixes_extract_guards(spark):
 
 
 def test_pit_arrow_duplicate_t_deterministic(spark):
-    """The arrow PIT path must lexsort (m tiebreak) like _prepare_arrays:
+    """The arrow PIT path must lexsort (m tiebreak) like sort_curve:
     with duplicate timestamps, consecutive-difference features were
     arrival-order-dependent under a plain stable sort."""
     import pandas as pd
@@ -486,10 +571,9 @@ def test_pit_arrow_duplicate_t_deterministic(spark):
 
 
 def test_payload_join_keeps_null_entity_and_checks_collisions(spark):
-    """The payload_via_join branch must (a) keep null-entity probe rows
-    (null-safe join; the cogroup path emits fill rows for them) and
-    (b) reject payload columns named like feature outputs BEFORE the
-    slim recursion hides them."""
+    """Horizon PIT with a payload column must (a) keep null-entity probe
+    rows (the cogroup emits fill rows for the null group) and (b) reject
+    payload columns named like feature outputs before the job runs."""
     import numpy as np
     import pandas as pd
     obs = spark.createDataFrame(pd.DataFrame({
