@@ -3,8 +3,8 @@
 
 Runs the headline queries at $SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1)
 on local[$SPARK_GRAFT_CPUS], prints ONE JSON line:
-  {"metric": "bench_total", "value": <sec>, "unit": "sec",
-   "queries": {name: sec, ...}, "sf": <float>, ...extras}
+  {"metric": "bench_total", "unit": "sec", "sf": <float>, ...extras,
+   "value": <sec>, "queries": {name: sec, ...}}
 
 Extras: "feature_vectors_per_sec" (flagship PIT throughput) and "scaling"
 (the north rule's N->4N evidence: the identical PIT job at local[8] and
@@ -501,13 +501,15 @@ def main():
     extras["n_probe_rows"] = n_probe_rows
     extras["n_entities"] = N_ENTITIES
 
+    # value and queries go last: a reader that keeps only the tail of the
+    # line still gets the total and every per-query timing
     out = {
         "metric": "bench_total",
-        "value": round(sum(results.values()), 3),
         "unit": "sec",
-        "queries": results,
         "sf": SF,
         **extras,
+        "value": round(sum(results.values()), 3),
+        "queries": results,
     }
     print(json.dumps(out))
 

@@ -16,10 +16,10 @@ a posix/shared-fs path — the bucket manifest uses local file I/O
 manifest with snapshot summaries).  The run is checkpointed per probe
 bucket (plans/checkpoint.py): lineage +
 rows/sec metrics land in ``<output>/_manifest.jsonl`` and a crashed or
-pre-empted job resumed with ``--resume`` recomputes only the in-flight
-bucket.  The extraction itself is the engine's standard zero-leakage PIT
-plan (operators/extract.py); hot-entity salting is exposed via
-``--salt-partitions/--hot-threshold``.
+pre-empted job resumed with ``--resume`` recomputes only the buckets that
+were in flight (at most four).  The extraction
+itself is the engine's standard zero-leakage PIT plan (operators/extract.py);
+hot-entity salting is exposed via ``--salt-partitions/--hot-threshold``.
 """
 
 from __future__ import annotations
@@ -54,7 +54,10 @@ def build_parser() -> argparse.ArgumentParser:
     p.add_argument("--salt-partitions", type=int, default=None)
     p.add_argument("--hot-threshold", type=int, default=None)
     p.add_argument("--n-buckets", type=int, default=256,
-                   help="checkpoint buckets (Iceberg bucket(N, entity))")
+                   help="checkpoint buckets (Iceberg bucket(N, entity)); "
+                        "buckets run as concurrent Spark jobs, up to four "
+                        "(or the cluster's default parallelism, if smaller) "
+                        "at a time")
     p.add_argument("--resume", action="store_true",
                    help="skip buckets already committed in the manifest")
     p.add_argument("--master", default=None,

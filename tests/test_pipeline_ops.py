@@ -1,6 +1,7 @@
 """Tests for dedup / similarity / text / multimodal / spec / checkpoint /
 sources — the training-data-pipeline operator set."""
 
+import json
 import os
 
 import numpy as np
@@ -204,6 +205,169 @@ def test_checkpointed_run_resume(spark, tmp_path):
     assert len(done3) == 1
     assert len(run.completed_buckets()) == 4
     assert run.read(spark).count() == 48
+
+
+def _ckpt_probes(spark):
+    from light_curve_python_spark.datagen import generate_probes
+    return generate_probes(spark, 24, probes_per_entity=3, seed=2) \
+        .select("doc_id", "ts")
+
+
+def _manifest_buckets(run):
+    with open(run.manifest_path) as f:
+        return [json.loads(line)["bucket"] for line in f if line.strip()]
+
+
+def _double_ts(subset):
+    return subset.withColumn("feat", F.col("ts") * 2)
+
+
+def _assert_resumes_exactly_missing(spark, run, probes):
+    """Every committed bucket is in the manifest once; a good re-run
+    executes exactly the missing buckets and the read-back equals a
+    one-shot compute over all probes."""
+    committed = _manifest_buckets(run)
+    assert len(committed) == len(set(committed))
+    missing = sorted(set(range(run.n_buckets)) - set(committed))
+    assert run.run(probes, _double_ts) == missing
+    assert sorted(_manifest_buckets(run)) == list(range(run.n_buckets))
+    cols = ["doc_id", "ts", "feat"]
+    assert sorted(run.read(spark).select(cols).collect()) \
+        == sorted(_double_ts(probes).select(cols).collect())
+
+
+def test_checkpointed_run_plan_failure_commits_started_buckets(spark,
+                                                               tmp_path):
+    probes = _ckpt_probes(spark)
+    run = CheckpointedRun(str(tmp_path / "run"), "doc_id", n_buckets=4,
+                          spec_json="{}")
+    planned = []
+
+    def compute(subset):
+        if len(planned) == 2:
+            raise RuntimeError("plan failed")
+        planned.append(1)
+        return _double_ts(subset)
+
+    with pytest.raises(RuntimeError, match="plan failed"):
+        run.run(probes, compute)
+    # buckets 0 and 1 were already running: drained and committed; the
+    # failing bucket 2 and the never-started bucket 3 are not
+    assert sorted(_manifest_buckets(run)) == [0, 1]
+    _assert_resumes_exactly_missing(spark, run, probes)
+
+
+def test_checkpointed_run_write_failure_commits_finished_buckets(spark,
+                                                                 tmp_path):
+    probes = _ckpt_probes(spark)
+    run = CheckpointedRun(str(tmp_path / "run"), "doc_id", n_buckets=4,
+                          spec_json="{}")
+    nonempty = sorted(r.b for r in probes.select(
+        run.bucket_col().alias("b")).distinct().collect())
+    k = nonempty[len(nonempty) // 2]
+
+    def compute(subset):
+        return subset.withColumn(
+            "feat", F.when(run.bucket_col() == k,
+                           F.raise_error(F.lit("bucket write failed")))
+            .otherwise(F.col("ts") * 2))
+
+    with pytest.raises(Exception, match="bucket write failed"):
+        run.run(probes, compute)
+    assert k not in _manifest_buckets(run)
+    _assert_resumes_exactly_missing(spark, run, probes)
+
+
+def test_checkpointed_run_bucket_jobs_inherit_job_group(spark, tmp_path):
+    sc = spark.sparkContext
+    probes = _ckpt_probes(spark)
+    run = CheckpointedRun(str(tmp_path / "run"), "doc_id", n_buckets=4,
+                          spec_json="{}")
+    sc.setJobGroup("ckpt-grp", "checkpointed run")
+    try:
+        assert run.run(probes, _double_ts) == [0, 1, 2, 3]
+    finally:
+        for key in ("spark.jobGroup.id", "spark.job.description",
+                    "spark.job.interruptOnCancel"):
+            sc.setLocalProperty(key, None)
+    # each bucket's write and read-back count ran under the caller's group,
+    # so cancelling the group reaches the bucket jobs
+    assert len(sc.statusTracker().getJobIdsForGroup("ckpt-grp")) \
+        >= 2 * run.n_buckets
+
+
+def test_checkpointed_run_throttles_to_pool_width(spark, tmp_path,
+                                                 monkeypatch):
+    """More pending buckets than the pool is wide: a bucket is planned only
+    once a slot is free, and a plan failure stops planning, drains the
+    running buckets and commits them."""
+    import light_curve_python_spark.plans.checkpoint as ckpt
+    # below the session's default parallelism, so the cap sets the width
+    monkeypatch.setattr(ckpt, "_MAX_IN_FLIGHT", 2)
+    width = 2
+    assert spark.sparkContext.defaultParallelism > width
+    probes = _ckpt_probes(spark)
+    run = CheckpointedRun(str(tmp_path / "run"), "doc_id", n_buckets=10,
+                          spec_json="{}")
+    calls, committed_at_plan = [], []
+
+    def compute(subset):
+        calls.append(1)
+        if len(calls) == 7:
+            raise RuntimeError("plan failed")
+        committed_at_plan.append(len(run.completed_buckets()))
+        return _double_ts(subset)
+
+    with pytest.raises(RuntimeError, match="plan failed"):
+        run.run(probes, compute)
+    # bucket i starts with at most width - 1 others in flight, so at least
+    # i - width + 1 earlier buckets are already committed
+    assert all(n >= i - width + 1 for i, n in enumerate(committed_at_plan))
+    assert committed_at_plan[width] >= 1
+    # bucket 6 failed to plan: 7.. never planned, 0-5 drained and committed
+    assert len(calls) == 7
+    assert sorted(_manifest_buckets(run)) == list(range(6))
+    _assert_resumes_exactly_missing(spark, run, probes)
+
+
+def test_checkpointed_run_without_pinned_threads(spark, tmp_path,
+                                                monkeypatch):
+    """With PYSPARK_PIN_THREAD=false, pyspark's inheritable_thread_target
+    returns the session it was given instead of a wrapper."""
+    import light_curve_python_spark.plans.checkpoint as ckpt
+    monkeypatch.setattr(ckpt, "inheritable_thread_target", lambda f=None: f)
+    probes = _ckpt_probes(spark)
+    run = CheckpointedRun(str(tmp_path / "run"), "doc_id", n_buckets=2,
+                          spec_json="{}")
+    assert run.run(probes, _double_ts) == [0, 1]
+    assert run.read(spark).count() == probes.count()
+
+
+def test_checkpointed_run_plans_in_order_on_caller_thread(spark, tmp_path):
+    import threading
+    probes = _ckpt_probes(spark)
+    run = CheckpointedRun(str(tmp_path / "run"), "doc_id", n_buckets=6,
+                          spec_json="{}")
+    # only buckets 1 and 4 stay committed: the run plans the other four
+    run.run(probes, _double_ts)
+    with open(run.manifest_path) as f:
+        lines = f.readlines()
+    with open(run.manifest_path, "w") as f:
+        f.writelines(line for line in lines
+                     if json.loads(line)["bucket"] in (1, 4))
+    planned = []
+
+    def compute(subset):
+        planned.append((threading.get_ident(),
+                        subset.select(run.bucket_col().alias("b"))
+                        .distinct().collect()))
+        return _double_ts(subset)
+
+    executed = run.run(probes, compute)
+    assert executed == [0, 2, 3, 5]
+    assert {tid for tid, _ in planned} == {threading.get_ident()}
+    assert [[r.b for r in rows] for _, rows in planned] \
+        == [[0], [2], [3], [5]]
 
 
 def test_validate_and_mag_to_flux(spark):
